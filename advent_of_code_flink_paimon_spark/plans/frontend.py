@@ -1015,9 +1015,12 @@ class Engine:
         verbatim statement (guide.md:138: ``JOIN sensor_info /*+
         OPTIONS('lookup.async'='true', ...) */ FOR SYSTEM_TIME ...``)
         carries a dimension-side hint here. Strip it locally before
-        matching: on the streaming lookup path the async/cache options
-        are advisory (our lookup pipeline already batches + retries), and
-        only the batch fallback should let the catalog consume OPTIONS.
+        matching: on the streaming lookup path the async options are
+        moot (our lookup pipeline already batches + retries) and the
+        lookup cache is always on — the pipeline keeps the dimension
+        image cached per dimension snapshot, so 'lookup.cache' options
+        have nothing to tune. Only the batch fallback should let the
+        catalog consume OPTIONS.
         The output column set is the pipeline's contract (stream columns
         + dimension attributes) — the SELECT list is advisory here, as
         the sink schema is the target table's."""

@@ -9,7 +9,13 @@ tutorial/guide.md:122-129); output order unconstrained
 Micro-batch Spark equivalent (SURVEY.md §3 EP3): per batch,
 
 1. candidates = new stream rows ∪ retry queue
-2. re-read the dimension's LATEST snapshot (merged-on-read) → broadcast
+2. the dimension's LATEST snapshot (merged-on-read) → broadcast. The
+   merged image is persisted and reused by later batches until the
+   dimension's snapshot identity (id + commit time + schema version)
+   changes — the role of Paimon's lookup cache, which refreshes only
+   when a new dimension snapshot lands. Every batch still joins the
+   dimension as of its own processing time: the identity is checked
+   per batch, and a batch that sees a new one re-reads.
 3. left join on the key: matches → append to the enriched table;
    misses with attempts < max → back to the retry queue (attempts+1);
    misses at max attempts → dropped (dead-lettered in the stats)
@@ -22,9 +28,11 @@ ignored, as SURVEY.md §2.3 documents.
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 from pyspark.sql.types import StructType
 
 from advent_of_code_flink_paimon_spark.lakehouse.catalog import Catalog
@@ -51,6 +59,12 @@ class LookupJoinPipeline:
         self.trigger_seconds, self.available_now = trigger_seconds, available_now
         self.checkpoint_dir = checkpoint_dir or f"{target_table.paths.root}/.checkpoint-{name}"
         self.retry = self._retry_table()
+        # the persisted dimension image and the identity it was read at;
+        # batches refresh it on the stream thread, query termination
+        # releases it from the listener thread
+        self._dim_lock = threading.RLock()
+        self._dim_image: DataFrame | None = None
+        self._dim_key: tuple | None = None
 
     def _retry_table(self) -> Table:
         """Persistent retry queue: stream schema + attempts counter."""
@@ -94,9 +108,9 @@ class LookupJoinPipeline:
         pending = self.retry.read(spark)
         candidates = new_rows.unionByName(pending)
 
-        # the temporal aspect: dimension re-read at *this* batch's
+        # the temporal aspect: the dimension as of *this* batch's
         # processing time — merged-on-read LATEST snapshot
-        dim = self.dim.read(spark).withColumn("__matched", F.lit(True))
+        dim = self._dimension(spark)
         dim_cols = [c for c in dim.columns if c not in (self.on, "__matched")]
 
         # TWO consumers (target append + queue overwrite): persist the
@@ -120,6 +134,29 @@ class LookupJoinPipeline:
         finally:
             joined.unpersist()
 
+    def _dimension(self, spark: SparkSession) -> DataFrame:
+        """The dimension's merged LATEST image plus the ``__matched``
+        marker, persisted across batches. Re-read only when the
+        snapshot identity or the schema version moved (an ALTER TABLE
+        changes the read without a new snapshot). The persist is lazy:
+        the batch's own join materializes it, so a refresh costs no
+        extra action. A dimension commit landing between the identity
+        check and the read only makes the image newer than its key, so
+        the next batch refreshes again — never the stale way round."""
+        key = (self.dim.snapshot_identity(), self.dim.schema_version)
+        with self._dim_lock:
+            if self._dim_image is None or key != self._dim_key:
+                self._release_dimension()
+                self._dim_image = self.dim.read(spark).withColumn("__matched", F.lit(True)).persist()
+                self._dim_key = key
+            return self._dim_image
+
+    def _release_dimension(self) -> None:
+        with self._dim_lock:
+            if self._dim_image is not None:
+                self._dim_image.unpersist()
+                self._dim_image = self._dim_key = None
+
     def start(self) -> StreamingQuery:
         writer = (
             self.source.writeStream.queryName(self.name)
@@ -130,7 +167,10 @@ class LookupJoinPipeline:
             writer = writer.trigger(availableNow=True)
         elif self.trigger_seconds:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        return writer.start()
+        q = writer.start()
+        # the cached dimension image must not outlive the query
+        _OnTerminated(self.source.sparkSession, q, self._release_dimension)
+        return q
 
     def run(self) -> StreamingQuery:
         """start() + awaitTermination() under ``stream_confs`` (see
@@ -142,3 +182,34 @@ class LookupJoinPipeline:
             q = self.start()
             q.awaitTermination()
         return q
+
+
+class _OnTerminated(StreamingQueryListener):
+    """Runs ``callback`` once when ``query`` terminates, however it
+    ends (stop, failure, availableNow drained), then deregisters."""
+
+    def __init__(self, spark: SparkSession, query: StreamingQuery, callback):
+        self.query_id, self.callback = str(query.id), callback
+        self.streams = spark.streams
+        self._once = threading.Lock()
+        self.streams.addListener(self)
+        if not query.isActive:  # ended before the listener was added
+            self._fire()
+
+    def _fire(self) -> None:
+        if self._once.acquire(blocking=False):
+            self.callback()
+            self.streams.removeListener(self)
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        if str(event.id) == self.query_id:
+            self._fire()

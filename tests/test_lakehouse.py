@@ -3083,3 +3083,92 @@ def test_decimal_and_timestamp_columns_roundtrip_with_safe_stats(spark, tmp_path
     assert t.metadata_min_max("min", "k") == (True, 1)  # untouched path
     got = {(r.k, r.d) for r in t.read(spark).collect()}
     assert got == {(1, Decimal("1.000001")), (2, Decimal("2.999999"))}
+
+
+def _two_handles_after_foreign_rollback(spark, catalog):
+    """Handle A appends k=1,2,3 (identifiers 1,2,3); handle B rolls back
+    to snapshot 1 and appends k=10, k=11, re-issuing ids 2 and 3 — so
+    A's caches hold reconstructions for ids that now name different
+    snapshots."""
+    catalog.create_table("rb", "k long", {})
+    a, b = catalog.get_table("rb"), catalog.get_table("rb")
+    for k in (1, 2, 3):
+        a.append_rows(spark, [(k,)], commit_identifier=k)
+    # warm both of A's caches at snapshot 3: the manifest and the
+    # replay guard's identifier set
+    assert sorted(r.k for r in a.read(spark).collect()) == [1, 2, 3]
+    assert a.append_rows(spark, [(3,)], commit_identifier=3) is None
+    b.rollback_to(1)
+    for k in (10, 11):
+        b.append_rows(spark, [(k,)])
+    assert b.latest_snapshot_id() == a.latest_snapshot_id() == 3
+    return a, b
+
+
+def test_stale_handle_reads_after_foreign_rollback(spark, catalog):
+    """Snapshot caches key on snapshot identity (id + commit time +
+    schema), not the bare id that rollback_to reuses: the stale
+    handle must read the new chain, not files rollback deleted."""
+    a, _ = _two_handles_after_foreign_rollback(spark, catalog)
+    assert sorted(r.k for r in a.read(spark).collect()) == [1, 10, 11]
+    fresh = catalog.get_table("rb")
+    assert sorted(r.k for r in fresh.read(spark).collect()) == [1, 10, 11]
+
+
+def test_stale_handle_replays_rolled_back_identifier(spark, catalog):
+    """The replay guard's identifier cache must not outlive a foreign
+    rollback: identifier 2 was rolled back, so replaying it commits."""
+    a, _ = _two_handles_after_foreign_rollback(spark, catalog)
+    assert a.append_rows(spark, [(2,)], commit_identifier=2) == 4
+    assert a.append_rows(spark, [(3,)], commit_identifier=3) == 5
+    assert a.append_rows(spark, [(3,)], commit_identifier=3) is None
+    got = sorted(r.k for r in catalog.get_table("rb").read(spark).collect())
+    assert got == [1, 2, 3, 10, 11]
+
+
+def test_rollback_drops_own_identifier_cache(spark, catalog):
+    """rollback_to on the committing handle forgets the rolled-back
+    identifiers, even once later commits reuse the cached LATEST id
+    (fast_forward already dropped the cache)."""
+    t = catalog.create_table("rbi", "k long", {})
+    for k in (1, 2, 3):
+        t.append_rows(spark, [(k,)], commit_identifier=k)
+    assert ("APPEND", 3) in t._committed_identifiers()
+    t.rollback_to(1)
+    assert t._ids_cache is None
+    for k in (10, 11):
+        t.append_rows(spark, [(k,)])
+    assert ("APPEND", 2) not in t._committed_identifiers()
+    assert t.append_rows(spark, [(2,)], commit_identifier=2) == 4
+
+
+def _jobs_launched(spark, build) -> int:
+    """Spark jobs ``build()`` launches on this thread, counted through a
+    job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"no-listing-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan-only read construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_over_many_files_launch_no_listing_job(spark, catalog):
+    """Past Spark's default 32-path threshold an explicit file list was
+    listed by a distributed job with one task per path; the session
+    lists manifest-named files on the driver instead, so building a
+    read launches no job at all."""
+    t = catalog.create_table("many", "k long, v string", {})
+    for i in range(40):
+        t.append_rows(spark, [(i, "x")])
+    assert len(t.manifest()) >= 40
+    assert _jobs_launched(spark, lambda: t.read(spark)) == 0
+    paths = [os.path.join(t.paths.root, e["file_path"]) for e in t.manifest()]
+    # schema given: inferring one costs a footer-reading job of its own
+    assert _jobs_launched(spark, lambda: spark.read.schema(t.schema).parquet(*paths)) == 0
+    assert t.read(spark).count() == 40

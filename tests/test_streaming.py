@@ -233,6 +233,98 @@ def test_lookup_join_enrichment_with_retry(spark, catalog, tmp_path):
     assert out.filter("latitude IS NULL").count() == 0
 
 
+def _enrichment(spark, catalog, tmp_path, trigger_seconds=None):
+    """A lookup join of a file stream against a 10-sensor dimension
+    committed at generation 1; returns (pipeline, landing dir)."""
+    dim = catalog.create_table("sensor_info", SENSOR_DDL, {"primary-key": "sensor_id"})
+    dim.upsert(sensor_info_static(spark, 10).withColumn("generation", F.lit(1)))
+    enriched = catalog.create_table("measurements_enriched", ENRICHED_DDL)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    source = spark.readStream.schema(MEASUREMENTS_DDL).parquet(str(landing))
+    pipe = LookupJoinPipeline(
+        "enrich", catalog, source, dim_table=dim, target_table=enriched,
+        on="sensor_id", trigger_seconds=trigger_seconds,
+        checkpoint_dir=str(tmp_path / "ck-enrich"),
+    )
+    return pipe, landing
+
+
+def _readings(spark, batch: int):
+    """One reading per sensor 1..10; the reading value names the batch."""
+    return spark.range(1, 11).select(
+        F.col("id").alias("sensor_id"),
+        F.lit(batch).cast("decimal(5,1)").alias("reading"),
+        F.current_timestamp().alias("event_time"),
+    )
+
+
+def _set_generation(spark, catalog, generation: int) -> int:
+    """Upsert every sensor at ``generation`` through a second handle,
+    as the dimension's own writer job would."""
+    writer = catalog.get_table("sensor_info")
+    return writer.upsert(sensor_info_static(spark, 10).withColumn("generation", F.lit(generation)))
+
+
+def _generations(spark, pipe, batch: int) -> set:
+    rows = pipe.target.read(spark).filter(F.col("reading") == batch).collect()
+    assert len(rows) == 10
+    return {r.generation for r in rows}
+
+
+def test_lookup_join_caches_dimension_per_snapshot(spark, catalog, tmp_path, monkeypatch):
+    """The merged dimension is read once per dimension snapshot, not
+    once per batch — and still refreshed for every new snapshot,
+    including one that reuses a rolled-back snapshot id."""
+    pipe, _ = _enrichment(spark, catalog, tmp_path)
+    reads = []
+    read = pipe.dim.read
+    monkeypatch.setattr(pipe.dim, "read", lambda *a, **k: reads.append(1) or read(*a, **k))
+    try:
+        for b in range(3):
+            pipe._process_batch(_readings(spark, b), b)
+        assert len(reads) == 1
+        assert all(_generations(spark, pipe, b) == {1} for b in range(3))
+
+        assert _set_generation(spark, catalog, 2) == 2
+        pipe._process_batch(_readings(spark, 3), 3)
+        assert len(reads) == 2
+        assert _generations(spark, pipe, 3) == {2}
+
+        # rollback + a new commit reuse snapshot id 2 with new rows
+        catalog.get_table("sensor_info").rollback_to(1)
+        assert _set_generation(spark, catalog, 3) == 2
+        pipe._process_batch(_readings(spark, 4), 4)
+        assert len(reads) == 3
+        assert _generations(spark, pipe, 4) == {3}
+    finally:
+        pipe._release_dimension()
+
+
+def test_lookup_join_releases_dimension_cache_when_query_stops(spark, catalog, tmp_path):
+    """The cached dimension image lives while the query runs and is
+    unpersisted once it terminates: the persistent-RDD census returns
+    to its baseline."""
+    from tests.test_cache_hygiene import _n_cached
+
+    pipe, landing = _enrichment(spark, catalog, tmp_path, trigger_seconds=1)
+    baseline = _n_cached(spark)
+    _readings(spark, 0).write.mode("append").parquet(str(landing))
+    q = pipe.start()
+    try:
+        assert _wait(lambda: pipe.target.latest_snapshot_id() is not None, timeout=60)
+        # between triggers only the dimension image stays pinned
+        assert _wait(lambda: not q.status["isTriggerActive"]
+                     and _n_cached(spark) == baseline + 1, timeout=30, interval=0.2)
+        assert pipe._dim_image is not None
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    assert _wait(lambda: _n_cached(spark) == baseline, timeout=30, interval=0.2)
+    assert pipe._dim_image is None
+    assert _generations(spark, pipe, 0) == {1}
+
+
 def test_stream_table_files_source(spark, catalog, tmp_path):
     """File-backed streaming scan of a lakehouse table: committed files
     feed a downstream streaming query (stream/batch unification over one
