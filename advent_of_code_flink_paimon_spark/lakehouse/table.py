@@ -920,12 +920,15 @@ class Table:
         ]
 
     def added_record_count(self, sid: int | None) -> int:
-        """Rows a just-made commit added, from snapshot metadata alone
+        """Rows the commit ``sid`` added: the record count of the files
+        it wrote, for every commit kind (Paimon's deltaRecordCount) — a
+        partial OVERWRITE counts only its rewritten partitions, a
+        COMPACT its rewritten files. Read from snapshot metadata alone
         (no Spark job — r17 optimization: build/refresh paths used to
         pay a persist + count() pass for a number the manifest already
-        knows). None (= empty/no-op commit) → 0. An OVERWRITE replaces
-        the whole image, so its total_record_count IS this commit's row
-        count; an APPEND's added rows are the total's delta vs the
+        knows). None (= empty/no-op commit) → 0. Snapshots written
+        before the ``added_record_count`` stamp fall back to totals: a
+        non-APPEND's total_record_count, an APPEND's delta vs the
         previous snapshot."""
         if sid is None:
             return 0
@@ -2091,7 +2094,9 @@ class Table:
     def _delta_added_paths(self, from_snapshot: int, to_snapshot: int) -> list[str] | None:
         """Added file paths over (from, to] read straight off the delta
         manifests — O(commits in range), no O(table) reconstruction.
-        Returns None when the range crosses a full/replacing manifest
+        Expiry keeps the delta fields of the manifests it materializes,
+        so this works when ``from`` itself has expired. Returns None
+        when the range crosses a manifest without them
         (OVERWRITE/COMPACT or a periodic full image): those change the
         live set in ways a pure added-union cannot represent, so the
         caller falls back to the manifest diff."""
@@ -2099,7 +2104,7 @@ class Table:
         sid = to_snapshot
         while sid > from_snapshot:
             doc = read_json(self.paths.manifest_path(sid))
-            if "files" in doc or doc["base_snapshot"] != sid - 1 or doc.get("removed"):
+            if "added" not in doc or doc["base_snapshot"] != sid - 1 or doc.get("removed"):
                 return None
             added.extend(e["file_path"] for e in doc["added"])
             sid -= 1
@@ -2824,13 +2829,15 @@ class Table:
         kept_seqs = {self.snapshot(sid)["sequence_number"] for sid in keep}
         # a kept snapshot whose manifest delta-chains through an expired
         # base must be materialized as a full manifest first, or it
-        # becomes unreadable the moment the base is deleted
+        # becomes unreadable the moment the base is deleted. The delta
+        # fields stay beside the image (readers prefer ``files``), so
+        # incremental reads from an expired snapshot still see what
+        # each kept commit added
         expired_set = set(expired)
         for sid in sorted(keep):
             if sid in set(ids) and self._manifest_chain(sid) & expired_set:
-                atomic_write_json(
-                    self.paths.manifest_path(sid), {"files": self.manifest(sid)}
-                )
+                path = self.paths.manifest_path(sid)
+                atomic_write_json(path, {**read_json(path), "files": self.manifest(sid)})
         # and every doomed delta must be materialized before ANY
         # manifest deletion (its base may be deleted first)
         expired_entries = {sid: self.manifest(sid) for sid in expired}

@@ -1839,11 +1839,9 @@ class DedupIngestPipeline:
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.operators.registry import (
-            micro_batch_confs,
-        )
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
-        with micro_batch_confs(self.spark):
+        with stream_confs(self.spark):
             return self._sink_body(batch_df, batch_id)
 
     def _sink_body(self, batch_df: DataFrame, batch_id: int) -> int:

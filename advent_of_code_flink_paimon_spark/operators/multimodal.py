@@ -1169,11 +1169,9 @@ class MediaDedupIngestPipeline:
         ).latest_snapshot_id()
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> int:
-        from advent_of_code_flink_paimon_spark.operators.registry import (
-            micro_batch_confs,
-        )
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
-        with micro_batch_confs(self.spark):
+        with stream_confs(self.spark):
             return self._sink_body(batch_df, batch_id)
 
     def _sink_body(self, batch_df: DataFrame, batch_id: int) -> int:

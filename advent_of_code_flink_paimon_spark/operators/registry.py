@@ -1,9 +1,13 @@
-"""Tiny registry used by every operator module.
+"""Query registry used by every operator module.
 
 A query is registered with an optional DuckDB oracle SQL string. The
 driver (``__spark_entry__.py``) aggregates all registries; queries
 without an oracle get a rows-only check (documented per SURVEY.md §2
-as non-SQL-expressible).
+as non-SQL-expressible). Besides the registry this module holds what
+query bodies share: query-scoped cache pins, the ``fan_out``
+parallelism helper, footer row counts, and the testdata loader ``T``.
+Micro-batch confs are not set here: ``stream_confs`` in
+``streaming/pipelines.py`` is their one place.
 """
 
 from __future__ import annotations
@@ -125,69 +129,6 @@ def demote(name: str) -> None:
     LIBRARY_QUERIES[name] = QUERIES.pop(name)
     if name in ORACLES:
         LIBRARY_ORACLES[name] = ORACLES.pop(name)
-
-
-import contextlib
-import threading
-
-# micro_batch_confs mutates SESSION-GLOBAL confs; two streaming queries
-# sharing one SparkSession run their foreachBatch bodies on different
-# threads, and an overlapping save/restore would let one sink snapshot
-# the other's temporary value and leave the session at the micro-batch
-# settings permanently (ADVICE r11). The lock serializes sink bodies —
-# correctness over overlap: a sink body is seconds of bounded work, and
-# the alternative (per-thread conf cloning) does not exist for a shared
-# session. RLock so a sink that composes another sink (write-through
-# calling a refresh that takes the guard) re-enters cleanly; the depth
-# counter makes the restore happen only at the OUTERMOST exit, so the
-# true pre-entry values always win.
-_MB_LOCK = threading.RLock()
-_MB_DEPTH = 0
-
-
-@contextlib.contextmanager
-def micro_batch_confs(spark: SparkSession, shuffle_partitions: int = 8):
-    """Scoped confs for a foreachBatch sink body, restored on exit:
-    AQE off and a batch-sized shuffle fan-out.
-
-    A micro-batch topology is bounded and small BY CONSTRUCTION (the
-    trigger carves the stream into batch-sized pieces), and every
-    shuffle a sink runs carries batch- or candidate-sized relations —
-    never corpus-sized ones (that is the whole point of the persisted
-    index + write-through design). Two consequences, both measured on
-    the vector-dedup sink at sf0.1:
-
-    - AQE's per-shuffle re-planning round (an extra scheduling cycle
-      per exchange) costs more wall than its runtime coalescing saves:
-      4.0 vs 5.1 s/batch. The static planner still broadcast-joins the
-      batch side from size stats.
-    - a corpus-sized ``spark.sql.shuffle.partitions`` over-fans tiny
-      exchanges: 32 → 8 took a steady batch from ~4.6 to ~2.9 s. On a
-      cluster, size ``shuffle_partitions`` to the trigger volume
-      (rows per trigger / a few hundred k rows per task), independent
-      of the corpus-side session conf.
-
-    Corpus-scale queries OUTSIDE the sinks keep the session defaults
-    (AQE skew-join splitting and coalescing matter there). The confs
-    are session-scoped, so bodies from DIFFERENT streaming queries
-    sharing a session are serialized by ``_MB_LOCK`` (see above) and
-    nested entries from one body restore only at the outermost exit —
-    the pre-entry values can never be clobbered by an interleaving."""
-    global _MB_DEPTH
-    with _MB_LOCK:
-        if _MB_DEPTH == 0:
-            prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            prev_sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        _MB_DEPTH += 1
-        try:
-            yield
-        finally:
-            _MB_DEPTH -= 1
-            if _MB_DEPTH == 0:
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-                spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 _FAN_OUT_BYTES_PER_SLOT = 1 << 20  # 1 MiB of input per core

@@ -134,7 +134,10 @@ def _overlap(*thunks):
     jobs' driver-side planning). Used ONLY for steps that touch
     DISJOINT tables (lists vs codes; per-consumer bookmark files are
     one atomic JSON each), so results are identical to the sequential
-    order. Returns results in submission order; exceptions propagate."""
+    order. Returns results in submission order. Failure semantics
+    differ from the sequential order: when one thunk raises, the others
+    still run to completion (and commit), and only the first exception,
+    in submission order, propagates — a second failure is masked."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
@@ -1955,11 +1958,9 @@ class VectorIngestPipeline:
 
     def sink(self, batch_df, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.operators.registry import (
-            micro_batch_confs,
-        )
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
-        with micro_batch_confs(self.spark):
+        with stream_confs(self.spark):
             return self._sink_body(batch_df, batch_id)
 
     def _sink_body(self, batch_df, batch_id: int) -> int:
@@ -3937,11 +3938,9 @@ class VectorDedupIngestPipeline:
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.operators.registry import (
-            micro_batch_confs,
-        )
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
-        with micro_batch_confs(self.spark):
+        with stream_confs(self.spark):
             return self._sink_body(batch_df, batch_id)
 
     def _sink_body(self, batch_df: DataFrame, batch_id: int) -> int:

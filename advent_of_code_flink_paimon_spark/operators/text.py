@@ -1307,11 +1307,9 @@ class SearchIngestPipeline:
 
     def sink(self, batch_df, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.operators.registry import (
-            micro_batch_confs,
-        )
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
-        with micro_batch_confs(self.spark):
+        with stream_confs(self.spark):
             docs_t = self.catalog.get_table(self.docs_table)
             batch = batch_df.select("doc_id", "text").persist()
             n = batch.count()

@@ -37,6 +37,7 @@ from pyspark.sql.types import StructType
 
 from advent_of_code_flink_paimon_spark.lakehouse.catalog import Catalog
 from advent_of_code_flink_paimon_spark.lakehouse.table import Table
+from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
 
 class LookupJoinPipeline:
@@ -79,17 +80,6 @@ class LookupJoinPipeline:
             return self.catalog.create_table(name, retry_schema)
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from advent_of_code_flink_paimon_spark.operators.registry import micro_batch_confs
-
-        spark = batch_df.sparkSession
-        # r17 optimization (guide §2.2/§3.1): the whole body — retry-queue
-        # read, broadcast lookup join, two batch-sized commits — is
-        # trigger-sized work; run it under the same scoped AQE-off +
-        # batch-sized shuffle fan-out the ingest-pipeline sinks use.
-        with micro_batch_confs(spark):
-            self._process_batch_inner(batch_df, batch_id)
-
-    def _process_batch_inner(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # NO early return on a replayed batch id: exactly-once spans TWO
         # commits (target append + queue overwrite). After a crash
@@ -167,20 +157,17 @@ class LookupJoinPipeline:
             writer = writer.trigger(availableNow=True)
         elif self.trigger_seconds:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        q = writer.start()
+        # the query's session clone takes the micro-batch confs here
+        with stream_confs(self.source.sparkSession):
+            q = writer.start()
         # the cached dimension image must not outlive the query
         _OnTerminated(self.source.sparkSession, q, self._release_dimension)
         return q
 
     def run(self) -> StreamingQuery:
-        """start() + awaitTermination() under ``stream_confs`` (see
-        streaming/pipelines.py): trigger-sized shuffle fan-out for the
-        whole run."""
-        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
-
-        with stream_confs(self.source.sparkSession):
-            q = self.start()
-            q.awaitTermination()
+        """start() + awaitTermination(); returns the terminated query."""
+        q = self.start()
+        q.awaitTermination()
         return q
 
 

@@ -21,51 +21,62 @@ from pyspark.sql.types import LongType
 from advent_of_code_flink_paimon_spark.lakehouse.table import Table
 
 # ---------------------------------------------------------------------------
-# Round 17 (optimization; guide §2.2): shuffle fan-out for a WHOLE
-# micro-batch streaming run. A trigger's topology is bounded and small
-# by construction (the trigger carves the stream into batch-sized
-# pieces), so the corpus-scale session default (32 locally, 2-3× total
-# cores on a cluster) over-fans every stateful exchange AND fixes an
-# oversized state-store instance count: stateful operators pin
-# `spark.sql.shuffle.partitions` into the checkpoint's offset-log
-# metadata at query START, and every later trigger pays one state-store
-# task per partition. Sizing: rows-per-trigger / a few hundred k rows
-# per task — `SPARK_GRAFT_STREAM_SHUFFLE` (default 8) parameterizes it;
-# on a 100 TB deployment with large triggers raise it accordingly.
-# Measured locally (sf0.1, quiet, 3-repeat medians): the 14 streaming
-# lifecycle cards 44.5 s → 32.8 s (see OPTIMIZATION_r17.md).
+# Micro-batch confs, set in this one place. Every streaming query runs on
+# a clone of its session, taken synchronously inside ``writer.start()``
+# (Structured Streaming's per-query session isolation). Confs set on the
+# parent around ``start()`` alone therefore stay in force for the whole
+# query: every foreachBatch body (``batch_df.sparkSession`` is the clone)
+# and the stateful shuffle partition count pinned in
+# ``<checkpoint>/offsets/0``. The parent is back at its own values as
+# soon as ``start()`` returns, so queries never see each other's confs.
 #
-# The lock guards only the save/restore bookkeeping and is NEVER held
-# across the run — a foreachBatch body taking micro_batch_confs on the
-# stream execution thread can therefore not deadlock against the
-# driver thread sitting in awaitTermination. Nested/concurrent runs
-# save once and restore at the outermost exit.
+# A trigger carves the stream into batch-sized pieces, so both confs are
+# sized to the trigger, not to the corpus. Measured at sf0.1:
+# - AQE off: its per-shuffle re-planning round costs more than its
+#   runtime coalescing saves on batch-sized exchanges, 4.0 vs 5.1 s per
+#   vector-dedup batch. The static planner still broadcast-joins the
+#   batch side from size stats.
+# - 8 shuffle partitions instead of the corpus-sized session default:
+#   32 → 8 took a steady vector-dedup batch from ~4.6 to ~2.9 s, and the
+#   14 streaming lifecycle cards from 44.5 to 32.8 s (stateful operators
+#   pay one state-store task per pinned partition on every trigger). On
+#   a cluster with large triggers, size it to rows per trigger / a few
+#   hundred k rows per task.
+#
+# Spark already turns AQE off on a query's clone; the operator sinks
+# that work on the parent session rather than on ``batch_df``'s clone
+# need both confs, so they wrap their body in stream_confs. The lock
+# guards only the save/restore bookkeeping, never a query or a sink
+# body; nested and concurrent entries save once and restore at the
+# outermost exit.
 # ---------------------------------------------------------------------------
+STREAM_SHUFFLE_PARTITIONS = 8
+_STREAM_CONF_KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 _STREAM_CONF_LOCK = threading.Lock()
 _STREAM_CONF_DEPTH = 0
-_STREAM_CONF_PREV: str | None = None
+_STREAM_CONF_PREV: dict[str, str] = {}
 
 
 @contextlib.contextmanager
 def stream_confs(spark: SparkSession, partitions: int | None = None):
-    """Scoped `spark.sql.shuffle.partitions` for one streaming run
-    (start → awaitTermination), sized to trigger volume (see above).
+    """AQE off and ``partitions`` (default STREAM_SHUFFLE_PARTITIONS)
+    shuffle partitions on ``spark`` for the scope (see above). A nested
+    entry keeps the outermost values.
 
-    ``partitions`` overrides the env default for pipelines whose
-    stateful operator is PYTHON-COMPUTE-BOUND rather than
-    overhead-bound (e.g. a per-key applyInPandasWithState fold over
-    hundreds of thousands of keys per trigger): there the fold wants
-    one partition per core, not the trigger-sized minimum — measured
-    on x140 (changelog_normalize over the full x128 DML sequence):
-    8 partitions 65.3 s vs defaultParallelism 22 s at sf0.1."""
+    ``partitions`` is for pipelines whose stateful operator is
+    Python-compute-bound rather than overhead-bound (e.g. a per-key
+    applyInPandasWithState fold over hundreds of thousands of keys per
+    trigger): the fold wants one partition per core — measured on x140
+    (changelog_normalize over the full x128 DML sequence): 8 partitions
+    65.3 s vs defaultParallelism 22 s at sf0.1."""
     global _STREAM_CONF_DEPTH, _STREAM_CONF_PREV
-    parts = str(partitions) if partitions else os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE", "8"
-    )
     with _STREAM_CONF_LOCK:
         if _STREAM_CONF_DEPTH == 0:
-            _STREAM_CONF_PREV = spark.conf.get("spark.sql.shuffle.partitions", "32")
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            _STREAM_CONF_PREV = {k: spark.conf.get(k) for k in _STREAM_CONF_KEYS}
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(partitions or STREAM_SHUFFLE_PARTITIONS)
+            )
         _STREAM_CONF_DEPTH += 1
     try:
         yield
@@ -73,7 +84,8 @@ def stream_confs(spark: SparkSession, partitions: int | None = None):
         with _STREAM_CONF_LOCK:
             _STREAM_CONF_DEPTH -= 1
             if _STREAM_CONF_DEPTH == 0:
-                spark.conf.set("spark.sql.shuffle.partitions", _STREAM_CONF_PREV)
+                for k, v in _STREAM_CONF_PREV.items():
+                    spark.conf.set(k, v)
 
 
 class Pipeline:
@@ -97,8 +109,8 @@ class Pipeline:
         self.trigger_seconds = trigger_seconds
         self.available_now = available_now
         self.transform = transform
-        # stream-run shuffle fan-out override for Python-compute-bound
-        # stateful folds (see stream_confs); None = trigger-sized default
+        # shuffle partitions for Python-compute-bound stateful folds
+        # (see stream_confs); None = the trigger-sized default
         self.shuffle_partitions = shuffle_partitions
         # Spark OUTPUT mode (None = Spark's default, append). An
         # upsert-MATERIALIZED rollup (continuous aggregate into a PK
@@ -115,7 +127,6 @@ class Pipeline:
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:
         from advent_of_code_flink_paimon_spark.lakehouse.table import CommitConflictError
-        from advent_of_code_flink_paimon_spark.operators.registry import micro_batch_confs
 
         if self.transform is not None:
             batch_df = self.transform(batch_df)
@@ -131,19 +142,13 @@ class Pipeline:
         # a half-replayed batch can never double-commit. A real Paimon
         # deployment resolves the same race with commit retries in the
         # committer operator.
-        #
-        # micro_batch_confs (r17 optimization, guide §2.2): the commit's
-        # shuffle/write topology is batch-sized — same scoped AQE-off +
-        # trigger-sized fan-out the ingest-pipeline sinks already use
-        # (the 32→8 / AQE measurements in operators/registry.py).
-        with micro_batch_confs(batch_df.sparkSession):
-            for attempt in range(4):
-                try:
-                    commit(batch_df, commit_identifier=batch_id)
-                    return
-                except CommitConflictError:
-                    if attempt == 3:
-                        raise
+        for attempt in range(4):
+            try:
+                commit(batch_df, commit_identifier=batch_id)
+                return
+            except CommitConflictError:
+                if attempt == 3:
+                    raise
 
     def start(self) -> StreamingQuery:
         writer = (
@@ -157,16 +162,17 @@ class Pipeline:
             writer = writer.trigger(availableNow=True)
         elif self.trigger_seconds:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        return writer.start()
+        # the query's session clone takes the micro-batch confs here
+        with stream_confs(self.source.sparkSession, self.shuffle_partitions):
+            return writer.start()
 
     def run(self) -> StreamingQuery:
-        """start() + awaitTermination() under ``stream_confs`` — the
-        synchronous (availableNow) way the lifecycle cards drive a
-        pipeline. Returns the terminated query so callers can read its
-        progress metrics (e.g. numRowsDroppedByWatermark)."""
-        with stream_confs(self.source.sparkSession, self.shuffle_partitions):
-            q = self.start()
-            q.awaitTermination()
+        """start() + awaitTermination() — the synchronous (availableNow)
+        way the lifecycle cards drive a pipeline. Returns the terminated
+        query so callers can read its progress metrics (e.g.
+        numRowsDroppedByWatermark)."""
+        q = self.start()
+        q.awaitTermination()
         return q
 
 

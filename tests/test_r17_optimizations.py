@@ -16,7 +16,6 @@ behavior pin here (OPTIMIZATION_r17.md):
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import pyspark.sql.functions as F
@@ -104,9 +103,7 @@ def test_stream_confs_scopes_and_restores(spark):
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     with stream_confs(spark):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == os.environ.get(
-            "SPARK_GRAFT_STREAM_SHUFFLE", "8"
-        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         with stream_confs(spark, partitions=16):
             # nested run keeps the OUTERMOST value (restore-at-depth-0)
             pass

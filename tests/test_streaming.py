@@ -2244,25 +2244,25 @@ def test_dedup_ingest_replay_refreshes_search_index(spark, catalog, tmp_path):
     assert got == want and any(d == 3 for d, _ in got)
 
 
-def test_micro_batch_confs_nested_and_concurrent(spark):
-    """ADVICE r11: micro_batch_confs mutates session-global confs —
-    nested entries restore only at the outermost exit, and two threads
-    (two streaming queries sharing the session) serialize instead of
-    clobbering each other's save/restore."""
+def test_stream_confs_nested_and_concurrent(spark):
+    """stream_confs mutates the confs of the session it is given —
+    nested entries restore only at the outermost exit, and concurrent
+    entries from several threads (operator sinks of two streaming
+    queries sharing the session) never leave the session at the
+    micro-batch values."""
     import threading
 
-    from advent_of_code_flink_paimon_spark.operators.registry import (
-        micro_batch_confs,
-    )
+    from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
 
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     sp0 = spark.conf.get("spark.sql.shuffle.partitions")
 
     # nested: inner exit must NOT restore (the outer body still runs at
     # micro-batch settings); outer exit restores the TRUE pre-entry values
-    with micro_batch_confs(spark):
+    with stream_confs(spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        with micro_batch_confs(spark, shuffle_partitions=4):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        with stream_confs(spark, partitions=4):
             pass
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
@@ -2270,14 +2270,15 @@ def test_micro_batch_confs_nested_and_concurrent(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == sp0
 
     # concurrent: N threads enter/exit repeatedly; at the end the
-    # session must be back at the pre-entry values (unserialized
+    # session must be back at the pre-entry values (unguarded
     # save/restore would let one thread snapshot another's temporary 8)
     errs = []
 
     def body():
         try:
             for _ in range(10):
-                with micro_batch_confs(spark):
+                with stream_confs(spark):
+                    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
                     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         except Exception as e:  # pragma: no cover - failure path
             errs.append(e)
@@ -2290,6 +2291,129 @@ def test_micro_batch_confs_nested_and_concurrent(spark):
     assert not errs
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     assert spark.conf.get("spark.sql.shuffle.partitions") == sp0
+
+
+def _offsets_conf(checkpoint_dir: str) -> dict:
+    """The session confs a query pinned in its first offset-log entry."""
+    import json
+
+    with open(os.path.join(checkpoint_dir, "offsets", "0")) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_pipeline_start_pins_stream_confs_on_query_session(spark, catalog, tmp_path):
+    """A Pipeline started with start() alone runs on a session clone
+    that carries the micro-batch confs: its transform sees AQE off and
+    8 shuffle partitions, the stateful partition count pinned in
+    offsets/0 follows (and ``shuffle_partitions`` overrides it), and
+    the parent session keeps its own values throughout."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    parent_before = tuple(spark.conf.get(k) for k in keys)
+    src_dir = str(tmp_path / "src")
+    spark.createDataFrame([(1,), (1,), (2,)], "k long").write.parquet(src_dir)
+
+    def run(name, **kw):
+        seen = []
+
+        def transform(df):
+            seen.append(tuple(df.sparkSession.conf.get(k) for k in keys))
+            seen.append(tuple(spark.conf.get(k) for k in keys))
+            return df
+
+        t = catalog.create_table(name, "k long", {})
+        source = spark.readStream.schema("k long").parquet(src_dir).dropDuplicates(["k"])
+        ckpt = str(tmp_path / f"ckpt-{name}")
+        q = Pipeline(
+            name, source, t, available_now=True, checkpoint_dir=ckpt,
+            transform=transform, **kw,
+        ).start()
+        assert q.awaitTermination(120)
+        assert sorted(r.k for r in t.read(spark).collect()) == [1, 2]
+        return seen, _offsets_conf(ckpt)
+
+    seen, pinned = run("confs_default")
+    assert seen[0] == ("false", "8")
+    assert seen[1] == parent_before  # the parent during the run
+    assert pinned["spark.sql.shuffle.partitions"] == "8"
+
+    seen, pinned = run("confs_override", shuffle_partitions=3)
+    assert seen[0] == ("false", "3")
+    assert pinned["spark.sql.shuffle.partitions"] == "3"
+    assert tuple(spark.conf.get(k) for k in keys) == parent_before
+
+
+def test_two_queries_run_sink_bodies_concurrently(spark, catalog, tmp_path):
+    """Two streaming queries on one session do not take turns running
+    their sink bodies: query A's batch waits (through a UDF in its
+    transform) for query B's first commit, which B can only make while
+    A's sink body is still running."""
+    src_a, src_b = str(tmp_path / "src_a"), str(tmp_path / "src_b")
+    spark.createDataFrame([(1,)], "k long").write.parquet(src_a)
+    spark.createDataFrame([(2,)], "k long").write.parquet(src_b)
+    ta = catalog.create_table("conc_a", "k long", {})
+    tb = catalog.create_table("conc_b", "k long", {})
+    b_committed = tb.paths.snapshot_path(1)
+
+    @F.udf("boolean")
+    def b_has_committed(_):
+        deadline = time.time() + 40
+        while time.time() < deadline:
+            if os.path.exists(b_committed):
+                return True
+            time.sleep(0.1)
+        return False
+
+    qa = Pipeline(
+        "conc_a", spark.readStream.schema("k long").parquet(src_a), ta,
+        available_now=True, checkpoint_dir=str(tmp_path / "ckpt_a"),
+        transform=lambda df: df.filter(b_has_committed("k")),
+    ).start()
+    qb = Pipeline(
+        "conc_b", spark.readStream.schema("k long").parquet(src_b), tb,
+        available_now=True, checkpoint_dir=str(tmp_path / "ckpt_b"),
+    ).start()
+    try:
+        assert qb.awaitTermination(120) and qa.awaitTermination(120)
+    finally:
+        for q in (qa, qb):
+            q.stop()
+    assert [r.k for r in tb.read(spark).collect()] == [2]
+    assert [r.k for r in ta.read(spark).collect()] == [1]
+
+
+def test_only_pipelines_module_sets_stream_confs():
+    """AQE and the shuffle partition count are set at runtime in one
+    place in the package: stream_confs in streaming/pipelines.py."""
+    import ast
+    import re
+
+    import advent_of_code_flink_paimon_spark as pkg
+
+    keys = {"spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"}
+    sql_set = re.compile(r"\bSET\s+spark\.sql\.(adaptive\.enabled|shuffle\.partitions)\b", re.I)
+    root = os.path.dirname(pkg.__file__)
+    setters = set()
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                src = f.read()
+            rel = os.path.relpath(path, root)
+            if sql_set.search(src):
+                setters.add(rel)
+            for node in ast.walk(ast.parse(src)):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "set"
+                    and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value in keys
+                ):
+                    setters.add(rel)
+    assert setters == {os.path.join("streaming", "pipelines.py")}
 
 
 def _img_payload(w, h, color, fmt="bmp"):

@@ -80,8 +80,8 @@ def test_ingest_pipeline_sustained_rates(spark, tmp_path):
     quality-filter, near-dedup, and maintain persisted indexes per
     micro-batch, so their floors guard the per-batch FIXED cost
     (round 11 cut it: cached band width, pointer-gated pre-refresh,
-    write-through index appends, fused probe action, and
-    micro_batch_confs' AQE/shuffle-fan-out scoping — vector-dedup went
+    write-through index appends, fused probe action, and the
+    batch-sized AQE/shuffle confs of stream_confs — vector-dedup went
     36.6 → ~147 rec/s at sf0.1).
 
     CADENCE CONTRACT (r10 ask #2): every single batch must finish
