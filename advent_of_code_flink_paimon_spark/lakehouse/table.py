@@ -1342,9 +1342,23 @@ class Table:
                         "accept retraction (__op) inputs; replace rows via "
                         "overwrite() instead"
                     )
-            combined = self._merge_combine(
-                df.withColumn("__ord", F.monotonically_increasing_id()), "__ord"
-            )
+            ordered = df.select(*cols).withColumn("__ord", F.monotonically_increasing_id())
+            if self.merge_engine == "partial-update" and self.sequence_groups:
+                # a per-commit partial cannot carry a sequence group
+                # across commits: it keeps one <seq> per group, not the
+                # <seq> at which each member was set, so a member value
+                # whose <seq> loses to the STORED group sequence would
+                # ride in on a later row that advances the group. Fold
+                # the batch onto the merged image of its keys instead
+                # (ordered ahead of every input row), so the stored row
+                # is the key's full state and the window gate sees the
+                # stored <seq>.
+                prior = self._pre_image_for(df, merged=True)
+                if prior is not None:
+                    ordered = prior.withColumn("__ord", F.lit(-1).cast("long")).unionByName(
+                        ordered
+                    )
+            combined = self._merge_combine(ordered, "__ord")
             deduped = combined.withColumn("__op", F.lit("U"))
         else:
             if "__op" not in df.columns:
@@ -1424,7 +1438,7 @@ class Table:
             os.rename(pending_changelog, final)
         return sid
 
-    def _pre_image_for(self, batch: DataFrame):
+    def _pre_image_for(self, batch: DataFrame, merged: bool = False):
         """Merged pre-image restricted to rows that can share a key with
         ``batch`` — per-commit cost scales with the BATCH, not the table.
 
@@ -1435,6 +1449,8 @@ class Table:
         and (b) a left-semi join to the batch's distinct keys BEFORE the
         merge-on-read window, so the rank shuffle carries only affected
         keys' rows. The bucket-set collect is bounded by num_buckets.
+        ``merged=True`` combines the rows under the table's merge engine
+        (:meth:`merge_raw`) instead of taking the latest stored row.
         Returns None for an empty table."""
         if self.latest_snapshot_id() is None:
             return None
@@ -1472,6 +1488,8 @@ class Table:
             return None
         raw = self._read_entries(spark, entries)
         raw = raw.join(batch.select(*pk).distinct(), on=pk, how="left_semi")
+        if merged:
+            return self.merge_raw(raw)
         cols = [f.name for f in self.schema.fields]
         w = Window.partitionBy(*pk).orderBy(*self._merge_order("__seq"))
         return (

@@ -1820,7 +1820,7 @@ class DedupIngestPipeline:
         training-data ingest runs: filter → near-dedup → commit →
         index. The filter is a row-local codegen predicate on the
         batch only (never the corpus), so it adds zero exchanges."""
-        self.spark, self.catalog = spark, catalog
+        self.catalog = catalog
         self.docs_table, self.checkpoint_dir = docs_table, checkpoint_dir
         self.verify_from_storage = verify_from_storage
         self.index_search = index_search
@@ -1839,12 +1839,7 @@ class DedupIngestPipeline:
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
-
-        with stream_confs(self.spark):
-            return self._sink_body(batch_df, batch_id)
-
-    def _sink_body(self, batch_df: DataFrame, batch_id: int) -> int:
+        spark = batch_df.sparkSession
         docs_t = self.catalog.get_table(self.docs_table)
         # pre-probe refresh, gated on two driver-side pointer reads:
         # when this pipeline is the sole writer, the write-through below
@@ -1856,7 +1851,7 @@ class DedupIngestPipeline:
         latest = docs_t.latest_snapshot_id() or 0
         if latest >= nxt:
             refresh_minhash_index(
-                self.spark, self.catalog, self.docs_table,
+                spark, self.catalog, self.docs_table,
                 store_shingles=self.verify_from_storage,
             )
             nxt = (docs_t.latest_snapshot_id() or 0) + 1
@@ -1878,7 +1873,7 @@ class DedupIngestPipeline:
             .drop("__h")
             .persist()
         )
-        idx = self.catalog.get_table(minhash_index_name(self.docs_table)).read(self.spark)
+        idx = self.catalog.get_table(minhash_index_name(self.docs_table)).read(spark)
         # ONE shingle pass + ONE (uncapped) banding pass serve the
         # corpus probe, the in-batch probe, the verify, AND the
         # post-append write-through — the batch is never re-shingled.
@@ -1914,7 +1909,7 @@ class DedupIngestPipeline:
             cand = pairs.select(F.col("j").alias("doc_id")).distinct()
             corpus_sharr = (
                 self.catalog.get_table(minhash_shingles_name(self.docs_table))
-                .read(self.spark)
+                .read(spark)
                 .join(cand, "doc_id", "left_semi")
             )
             sharr = batch_sharr.unionByName(corpus_sharr)
@@ -1922,7 +1917,7 @@ class DedupIngestPipeline:
             cand = pairs.select(F.col("j").alias("doc_id")).distinct()
             corpus_sharr = shingle_hash_arrays(
                 fan_out(
-                    docs_t.read(self.spark).join(cand, "doc_id", "left_semi"),
+                    docs_t.read(spark).join(cand, "doc_id", "left_semi"),
                     heavy=True,
                 )
             )
@@ -1953,7 +1948,7 @@ class DedupIngestPipeline:
                 # r11): refresh_inverted_index is bookmark-based, so it
                 # no-ops when already current.
                 refresh_minhash_index(
-                    self.spark, self.catalog, self.docs_table,
+                    spark, self.catalog, self.docs_table,
                     store_shingles=self.verify_from_storage,
                 )
                 if self.index_search:
@@ -1961,7 +1956,7 @@ class DedupIngestPipeline:
                         refresh_inverted_index,
                     )
 
-                    refresh_inverted_index(self.spark, self.catalog, self.docs_table)
+                    refresh_inverted_index(spark, self.catalog, self.docs_table)
         else:
             if sid == nxt:
                 # write-through: the survivors' index rows are the
@@ -1994,7 +1989,7 @@ class DedupIngestPipeline:
                 # a foreign commit interleaved (sid > nxt): the exact
                 # incremental refresh covers whatever the index misses
                 refresh_minhash_index(
-                    self.spark, self.catalog, self.docs_table,
+                    spark, self.catalog, self.docs_table,
                     store_shingles=self.verify_from_storage,
                 )
             if self.index_search:
@@ -2002,18 +1997,18 @@ class DedupIngestPipeline:
                     refresh_inverted_index,
                 )
 
-                refresh_inverted_index(self.spark, self.catalog, self.docs_table)
+                refresh_inverted_index(spark, self.catalog, self.docs_table)
         for df in (survivors, pairs, banded_full, batch_sharr, batch):
             df.unpersist()
         return n
 
     def start(self, source: DataFrame):
         """Attach to a streaming (doc_id, text) source."""
-        return (
-            source.writeStream.queryName(f"dedup-ingest-{self.docs_table}")
-            .foreachBatch(lambda df, bid: self.sink(df, bid))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import start_foreach_batch
+
+        return start_foreach_batch(
+            source, f"dedup-ingest-{self.docs_table}",
+            lambda df, bid: self.sink(df, bid), self.checkpoint_dir,
         )
 
 
@@ -2828,7 +2823,7 @@ def x110_fuzzy_decontaminate(spark, sf_dir):
 # x110 shipped library-gated in round 14 (the x101-x109 path); round 15
 # PROMOTES it into the scored registry (VERDICT r14 ask #2). The slot
 # comes from x36_chunk_dedup / x47_token_entropy / x22_token_count
-# (demoted this round; see the rotation block in __spark_entry__.py).
+# (demoted this round).
 #
 # x36_chunk_dedup demoted round 15: the chunk-hash dedup class stays
 # driver-scored via x45_substr_dedup and the x01/x02 exact family;

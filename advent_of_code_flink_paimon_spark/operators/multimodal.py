@@ -1148,7 +1148,7 @@ class MediaDedupIngestPipeline:
                 f"max_hamming={max_hamming} violates the pigeonhole bound "
                 f"(blocks={_PHASH_BLOCKS} catch at most {_PHASH_BLOCKS - 1} flips)"
             )
-        self.spark, self.catalog = spark, catalog
+        self.catalog = catalog
         self.media_table, self.checkpoint_dir = media_table, checkpoint_dir
         self.max_hamming = max_hamming
         self.features_fn = features_fn or extract_features
@@ -1158,27 +1158,21 @@ class MediaDedupIngestPipeline:
         self._thresholds = None
         self._meta_epoch = None
         if catalog.has_table(phash_meta_name(media_table)):
-            self._load_thresholds()
+            self._load_thresholds(spark)
 
-    def _load_thresholds(self):
-        self._thresholds = load_phash_thresholds(
-            self.spark, self.catalog, self.media_table
-        )
+    def _load_thresholds(self, spark):
+        self._thresholds = load_phash_thresholds(spark, self.catalog, self.media_table)
         self._meta_epoch = self.catalog.get_table(
             phash_meta_name(self.media_table)
         ).latest_snapshot_id()
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> int:
-        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
-
-        with stream_confs(self.spark):
-            return self._sink_body(batch_df, batch_id)
-
-    def _sink_body(self, batch_df: DataFrame, batch_id: int) -> int:
+        """foreachBatch body; returns the number of rows appended."""
         from advent_of_code_flink_paimon_spark.operators.dedup import (
             pack_refresh_range,
         )
 
+        spark = batch_df.sparkSession
         media_t = self.catalog.get_table(self.media_table)
         first_build = self._thresholds is None
         if not first_build:
@@ -1188,7 +1182,7 @@ class MediaDedupIngestPipeline:
                 phash_meta_name(self.media_table)
             ).latest_snapshot_id()
             if epoch != self._meta_epoch:
-                self._load_thresholds()
+                self._load_thresholds(spark)
             # pre-probe sync, gated on two driver-side pointer reads
             nxt = (
                 media_t.consumers().get(self._consumer_id, {}).get("next_snapshot_id", 1)
@@ -1196,7 +1190,7 @@ class MediaDedupIngestPipeline:
             latest = media_t.latest_snapshot_id() or 0
             if latest >= nxt:
                 refresh_phash_index(
-                    self.spark, self.catalog, self.media_table, self.features_fn
+                    spark, self.catalog, self.media_table, self.features_fn
                 )
                 nxt = (media_t.latest_snapshot_id() or 0) + 1
         else:
@@ -1240,20 +1234,20 @@ class MediaDedupIngestPipeline:
             if not self.catalog.has_table(meta):
                 self.catalog.create_table(meta, "d int, thr double", {})
             self.catalog.get_table(meta).overwrite_rows(
-                self.spark, [(int(d), float(t)) for d, t in enumerate(thresholds)]
+                spark, [(int(d), float(t)) for d, t in enumerate(thresholds)]
             )
             iname = phash_index_name(self.media_table)
             if not self.catalog.has_table(iname):
                 self.catalog.create_table(
                     iname, PHASH_INDEX_SCHEMA, {"bucket": "8", "bucket-key": "bv"}
                 )
-            self._load_thresholds()
+            self._load_thresholds(spark)
         thresholds = self._thresholds
         n_bits = len(thresholds)
         blocks = _phash_block_rows(
             phash_signatures(feats, thresholds), n_bits
         ).persist()
-        idx = self.catalog.get_table(phash_index_name(self.media_table)).read(self.spark)
+        idx = self.catalog.get_table(phash_index_name(self.media_table)).read(spark)
         dup_vs_corpus = (
             blocks.join(
                 idx.select("blk", "bv", F.col("doc_id").alias("j"),
@@ -1284,7 +1278,7 @@ class MediaDedupIngestPipeline:
                 # replayed micro-batch: bring the index current, same
                 # as a crash resume (bookmark-based → no-op if current)
                 refresh_phash_index(
-                    self.spark, self.catalog, self.media_table, self.features_fn
+                    spark, self.catalog, self.media_table, self.features_fn
                 )
         elif sid == nxt:
             # write-through: the survivors' block rows are in hand
@@ -1296,7 +1290,7 @@ class MediaDedupIngestPipeline:
             media_t.register_consumer(self._consumer_id, sid + 1)
         else:
             refresh_phash_index(
-                self.spark, self.catalog, self.media_table, self.features_fn
+                spark, self.catalog, self.media_table, self.features_fn
             )
         for df in (survivors, blocks, feats, batch):
             df.unpersist()
@@ -1304,12 +1298,12 @@ class MediaDedupIngestPipeline:
 
     def start(self, source: DataFrame):
         """Attach to a streaming MEDIA_SCHEMA source."""
-        return (
-            source.writeStream.queryName(f"media-dedup-ingest-{self.media_table}")
-            .foreachBatch(lambda df, bid: self.sink(df, bid))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import start_foreach_batch
+
+        return start_foreach_batch(
+            source, f"media-dedup-ingest-{self.media_table}",
+            lambda df, bid: self.sink(df, bid), self.checkpoint_dir,
+            available_now=True,
         )
 
 

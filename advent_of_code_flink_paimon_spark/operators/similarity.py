@@ -1949,7 +1949,7 @@ class VectorIngestPipeline:
         ivfpq: bool = False,
         ivfpqr: bool = False,
     ):
-        self.spark, self.catalog = spark, catalog
+        self.catalog = catalog
         self.vecs_table, self.checkpoint_dir = vecs_table, checkpoint_dir
         self.pq, self.ivf, self.ivfpq = pq, ivf, ivfpq
         self.ivfpqr = ivfpqr
@@ -1958,12 +1958,7 @@ class VectorIngestPipeline:
 
     def sink(self, batch_df, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
-
-        with stream_confs(self.spark):
-            return self._sink_body(batch_df, batch_id)
-
-    def _sink_body(self, batch_df, batch_id: int) -> int:
+        spark = batch_df.sparkSession
         vecs_t = self.catalog.get_table(self.vecs_table)
         batch = batch_df.select("vec_id", "embedding").persist()
         n = batch.count()
@@ -1971,37 +1966,37 @@ class VectorIngestPipeline:
             vecs_t.append(batch, commit_identifier=batch_id)
             if self.pq:
                 if not self.catalog.has_table(pq_codebook_name(self.vecs_table)):
-                    build_pq_index(self.spark, self.catalog, self.vecs_table)
+                    build_pq_index(spark, self.catalog, self.vecs_table)
                 else:
-                    refresh_pq_codes(self.spark, self.catalog, self.vecs_table)
+                    refresh_pq_codes(spark, self.catalog, self.vecs_table)
             if self.ivf:
                 if not self.catalog.has_table(ivf_centroids_name(self.vecs_table)):
-                    build_ivf_index(self.spark, self.catalog, self.vecs_table)
+                    build_ivf_index(spark, self.catalog, self.vecs_table)
                 else:
-                    refresh_ivf_lists(self.spark, self.catalog, self.vecs_table)
+                    refresh_ivf_lists(spark, self.catalog, self.vecs_table)
             if self.ivfpq:
                 # the single-table IVFADC layout (x67); its build also
                 # (re)writes the centroid/codebook tables it learns from
                 if not self.catalog.has_table(ivfpq_name(self.vecs_table)):
-                    build_ivfpq_index(self.spark, self.catalog, self.vecs_table)
+                    build_ivfpq_index(spark, self.catalog, self.vecs_table)
                 else:
-                    refresh_ivfpq_index(self.spark, self.catalog, self.vecs_table)
+                    refresh_ivfpq_index(spark, self.catalog, self.vecs_table)
             if self.ivfpqr:
                 # the residual IVFADC layout (x72, the paper's encoding)
                 if not self.catalog.has_table(ivfpqr_name(self.vecs_table)):
-                    build_ivfpq_residual_index(self.spark, self.catalog, self.vecs_table)
+                    build_ivfpq_residual_index(spark, self.catalog, self.vecs_table)
                 else:
-                    refresh_ivfpq_residual_index(self.spark, self.catalog, self.vecs_table)
+                    refresh_ivfpq_residual_index(spark, self.catalog, self.vecs_table)
         batch.unpersist()
         return n
 
     def start(self, source):
         """Attach to a streaming (vec_id, embedding) source."""
-        return (
-            source.writeStream.queryName(f"vector-ingest-{self.vecs_table}")
-            .foreachBatch(lambda df, bid: self.sink(df, bid))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import start_foreach_batch
+
+        return start_foreach_batch(
+            source, f"vector-ingest-{self.vecs_table}",
+            lambda df, bid: self.sink(df, bid), self.checkpoint_dir,
         )
 
 
@@ -2724,8 +2719,7 @@ def x111_semantic_decontaminate(spark, sf_dir):
 
 
 # x111 shipped library-gated in round 14 (the x101-x110 path); round 15
-# PROMOTES it into the scored registry (VERDICT r14 ask #2) — see the
-# rotation block in __spark_entry__.py for the slot accounting.
+# PROMOTES it into the scored registry (VERDICT r14 ask #2).
 
 
 from advent_of_code_flink_paimon_spark.operators.registry import (  # noqa: E402
@@ -3904,7 +3898,7 @@ class VectorDedupIngestPipeline:
             _COSINE_DUP_THRESHOLD,
         )
 
-        self.spark, self.catalog = spark, catalog
+        self.catalog = catalog
         self.vecs_table, self.checkpoint_dir = vecs_table, checkpoint_dir
         self.threshold = _COSINE_DUP_THRESHOLD if threshold is None else threshold
         # recall/cost knob (VERDICT r12 ask #4): multi_probe=1 probes
@@ -3938,16 +3932,11 @@ class VectorDedupIngestPipeline:
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
-
-        with stream_confs(self.spark):
-            return self._sink_body(batch_df, batch_id)
-
-    def _sink_body(self, batch_df: DataFrame, batch_id: int) -> int:
         from advent_of_code_flink_paimon_spark.operators.dedup import (
             pack_refresh_range,
         )
 
+        spark = batch_df.sparkSession
         vecs_t = self.catalog.get_table(self.vecs_table)
         # width-epoch guard: a rebuild moved the meta pointer → re-load
         # the frozen width so this batch bands, probes, and
@@ -3958,7 +3947,7 @@ class VectorDedupIngestPipeline:
             lsh_meta_name(self.vecs_table)
         ).latest_snapshot_id()
         if epoch != self._meta_epoch:
-            self._r = load_lsh_band_width(self.spark, self.catalog, self.vecs_table)
+            self._r = load_lsh_band_width(spark, self.catalog, self.vecs_table)
             self._meta_epoch = epoch
         # pre-probe index sync, gated on two driver-side pointer reads:
         # sole-writer batches never open the gate (the write-through
@@ -3968,7 +3957,7 @@ class VectorDedupIngestPipeline:
         )
         latest = vecs_t.latest_snapshot_id() or 0
         if latest >= nxt:
-            refresh_lsh_band_index(self.spark, self.catalog, self.vecs_table)
+            refresh_lsh_band_index(spark, self.catalog, self.vecs_table)
             nxt = (vecs_t.latest_snapshot_id() or 0) + 1
         # in-batch EXACT dedup as a map-combinable hash agg (first vec_id
         # per identical embedding): every row in a group carries the
@@ -3996,7 +3985,7 @@ class VectorDedupIngestPipeline:
         probe = _expand_probe_keys(bands, self._r, self.multi_probe)
         # 3. corpus probe (module function — plan-audited in tests)
         dup_vs_corpus = vector_dedup_corpus_dups(
-            self.spark, self.catalog, self.vecs_table, iv, probe, thr
+            spark, self.catalog, self.vecs_table, iv, probe, thr
         )
         # 4. in-batch near dedup: same bands, batch-local, lowest id
         # wins (one side expanded is enough: a 1-bit-flipped probe key
@@ -4035,7 +4024,7 @@ class VectorDedupIngestPipeline:
             if n:
                 # replayed micro-batch (identifier already committed):
                 # make sure the index covers it, same as a crash resume
-                refresh_lsh_band_index(self.spark, self.catalog, self.vecs_table)
+                refresh_lsh_band_index(spark, self.catalog, self.vecs_table)
         elif sid == nxt:
             # write-through: the survivors' band rows are already in
             # hand (bands persisted) — append them with the exact
@@ -4052,18 +4041,19 @@ class VectorDedupIngestPipeline:
         else:
             # a foreign commit interleaved (sid > nxt): the incremental
             # refresh covers whatever the index misses, same protocol
-            refresh_lsh_band_index(self.spark, self.catalog, self.vecs_table)
+            refresh_lsh_band_index(spark, self.catalog, self.vecs_table)
         for df in (survivors, bands, bv, batch):
             df.unpersist()
         return n
 
     def start(self, source: DataFrame):
         """Wire the sink to any streaming (vec_id, embedding) source."""
-        return (
-            source.writeStream.foreachBatch(lambda df, bid: self.sink(df, bid))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import start_foreach_batch
+
+        return start_foreach_batch(
+            source, f"vector-dedup-ingest-{self.vecs_table}",
+            lambda df, bid: self.sink(df, bid), self.checkpoint_dir,
+            available_now=True,
         )
 
 

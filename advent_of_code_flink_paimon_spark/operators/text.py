@@ -1300,32 +1300,29 @@ class SearchIngestPipeline:
     recover_refresh_bookmark heals a lost bookmark advance."""
 
     def __init__(self, spark, catalog, docs_table: str, checkpoint_dir: str):
-        self.spark, self.catalog = spark, catalog
+        self.catalog = catalog
         self.docs_table, self.checkpoint_dir = docs_table, checkpoint_dir
         if not catalog.has_table(docs_table):
             catalog.create_table(docs_table, "doc_id long, text string", {})
 
     def sink(self, batch_df, batch_id: int) -> int:
         """foreachBatch body; returns the number of rows appended."""
-        from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
-
-        with stream_confs(self.spark):
-            docs_t = self.catalog.get_table(self.docs_table)
-            batch = batch_df.select("doc_id", "text").persist()
-            n = batch.count()
-            if n:
-                docs_t.append(batch, commit_identifier=batch_id)
-                refresh_inverted_index(self.spark, self.catalog, self.docs_table)
-            batch.unpersist()
-            return n
+        docs_t = self.catalog.get_table(self.docs_table)
+        batch = batch_df.select("doc_id", "text").persist()
+        n = batch.count()
+        if n:
+            docs_t.append(batch, commit_identifier=batch_id)
+            refresh_inverted_index(batch_df.sparkSession, self.catalog, self.docs_table)
+        batch.unpersist()
+        return n
 
     def start(self, source):
         """Attach to a streaming (doc_id, text) source."""
-        return (
-            source.writeStream.queryName(f"search-ingest-{self.docs_table}")
-            .foreachBatch(lambda df, bid: self.sink(df, bid))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
+        from advent_of_code_flink_paimon_spark.streaming.pipelines import start_foreach_batch
+
+        return start_foreach_batch(
+            source, f"search-ingest-{self.docs_table}",
+            lambda df, bid: self.sink(df, bid), self.checkpoint_dir,
         )
 
 

@@ -18,7 +18,8 @@ Micro-batch Spark equivalent (SURVEY.md §3 EP3): per batch,
    per batch, and a batch that sees a new one re-reads.
 3. left join on the key: matches → append to the enriched table;
    misses with attempts < max → back to the retry queue (attempts+1);
-   misses at max attempts → dropped (dead-lettered in the stats)
+   misses at max attempts → dropped without a record (a dead-letter
+   table is ROADMAP direction 4)
 4. one snapshot commit per trigger on the enriched table
 
 The async/thread-count hints (lookup.async*, tutorial/guide.md:138) are
@@ -37,7 +38,7 @@ from pyspark.sql.types import StructType
 
 from advent_of_code_flink_paimon_spark.lakehouse.catalog import Catalog
 from advent_of_code_flink_paimon_spark.lakehouse.table import Table
-from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
+from advent_of_code_flink_paimon_spark.streaming.pipelines import start_foreach_batch
 
 
 class LookupJoinPipeline:
@@ -148,18 +149,10 @@ class LookupJoinPipeline:
                 self._dim_image = self._dim_key = None
 
     def start(self) -> StreamingQuery:
-        writer = (
-            self.source.writeStream.queryName(self.name)
-            .foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
+        q = start_foreach_batch(
+            self.source, self.name, self._process_batch, self.checkpoint_dir,
+            trigger_seconds=self.trigger_seconds, available_now=self.available_now,
         )
-        if self.available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.trigger_seconds:
-            writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        # the query's session clone takes the micro-batch confs here
-        with stream_confs(self.source.sparkSession):
-            q = writer.start()
         # the cached dimension image must not outlive the query
         _OnTerminated(self.source.sparkSession, q, self._release_dimension)
         return q

@@ -23,10 +23,11 @@ from advent_of_code_flink_paimon_spark.lakehouse.table import Table
 # ---------------------------------------------------------------------------
 # Micro-batch confs, set in this one place. Every streaming query runs on
 # a clone of its session, taken synchronously inside ``writer.start()``
-# (Structured Streaming's per-query session isolation). Confs set on the
-# parent around ``start()`` alone therefore stay in force for the whole
-# query: every foreachBatch body (``batch_df.sparkSession`` is the clone)
-# and the stateful shuffle partition count pinned in
+# (Structured Streaming's per-query session isolation). Every query of
+# the package is started by start_foreach_batch, which sets the confs on
+# the parent around ``start()`` alone; the clone keeps them for the
+# whole query: every foreachBatch body works on ``batch_df.sparkSession``
+# (the clone), and the stateful shuffle partition count is pinned in
 # ``<checkpoint>/offsets/0``. The parent is back at its own values as
 # soon as ``start()`` returns, so queries never see each other's confs.
 #
@@ -43,25 +44,22 @@ from advent_of_code_flink_paimon_spark.lakehouse.table import Table
 #   a cluster with large triggers, size it to rows per trigger / a few
 #   hundred k rows per task.
 #
-# Spark already turns AQE off on a query's clone; the operator sinks
-# that work on the parent session rather than on ``batch_df``'s clone
-# need both confs, so they wrap their body in stream_confs. The lock
-# guards only the save/restore bookkeeping, never a query or a sink
-# body; nested and concurrent entries save once and restore at the
-# outermost exit.
+# stream_confs holds a lock for its whole scope, so concurrent starts
+# take turns; the same thread may re-enter (a caller may hold a scope
+# around several starts). No sink body or stream thread enters it: it
+# would wait on a scope held by another thread.
 # ---------------------------------------------------------------------------
 STREAM_SHUFFLE_PARTITIONS = 8
 _STREAM_CONF_KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-_STREAM_CONF_LOCK = threading.Lock()
-_STREAM_CONF_DEPTH = 0
-_STREAM_CONF_PREV: dict[str, str] = {}
+_STREAM_CONF_LOCK = threading.RLock()
 
 
 @contextlib.contextmanager
 def stream_confs(spark: SparkSession, partitions: int | None = None):
     """AQE off and ``partitions`` (default STREAM_SHUFFLE_PARTITIONS)
-    shuffle partitions on ``spark`` for the scope (see above). A nested
-    entry keeps the outermost values.
+    shuffle partitions on ``spark`` for the scope (see above); the
+    values found on entry are restored on exit, so a nested entry
+    applies its own ``partitions`` and gives the outer scope's back.
 
     ``partitions`` is for pipelines whose stateful operator is
     Python-compute-bound rather than overhead-bound (e.g. a per-key
@@ -69,23 +67,46 @@ def stream_confs(spark: SparkSession, partitions: int | None = None):
     trigger): the fold wants one partition per core — measured on x140
     (changelog_normalize over the full x128 DML sequence): 8 partitions
     65.3 s vs defaultParallelism 22 s at sf0.1."""
-    global _STREAM_CONF_DEPTH, _STREAM_CONF_PREV
     with _STREAM_CONF_LOCK:
-        if _STREAM_CONF_DEPTH == 0:
-            _STREAM_CONF_PREV = {k: spark.conf.get(k) for k in _STREAM_CONF_KEYS}
+        prev = {k: spark.conf.get(k) for k in _STREAM_CONF_KEYS}
+        try:
             spark.conf.set("spark.sql.adaptive.enabled", "false")
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(partitions or STREAM_SHUFFLE_PARTITIONS)
             )
-        _STREAM_CONF_DEPTH += 1
-    try:
-        yield
-    finally:
-        with _STREAM_CONF_LOCK:
-            _STREAM_CONF_DEPTH -= 1
-            if _STREAM_CONF_DEPTH == 0:
-                for k, v in _STREAM_CONF_PREV.items():
-                    spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+
+
+def start_foreach_batch(
+    source: DataFrame,
+    name: str,
+    body,
+    checkpoint_dir: str,
+    *,
+    trigger_seconds: int | None = None,
+    available_now: bool = False,
+    output_mode: str | None = None,
+    partitions: int | None = None,
+) -> StreamingQuery:
+    """Start ``source`` as the streaming query ``name`` with ``body`` as
+    its foreachBatch sink; the query's session clone takes the
+    micro-batch confs (``partitions``: see stream_confs)."""
+    writer = (
+        source.writeStream.queryName(name)
+        .foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    with stream_confs(source.sparkSession, partitions):
+        return writer.start()
 
 
 class Pipeline:
@@ -151,20 +172,11 @@ class Pipeline:
                     raise
 
     def start(self) -> StreamingQuery:
-        writer = (
-            self.source.writeStream.queryName(self.name)
-            .foreachBatch(self._sink)
-            .option("checkpointLocation", self.checkpoint_dir)
+        return start_foreach_batch(
+            self.source, self.name, self._sink, self.checkpoint_dir,
+            trigger_seconds=self.trigger_seconds, available_now=self.available_now,
+            output_mode=self.output_mode, partitions=self.shuffle_partitions,
         )
-        if self.output_mode:
-            writer = writer.outputMode(self.output_mode)
-        if self.available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.trigger_seconds:
-            writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        # the query's session clone takes the micro-batch confs here
-        with stream_confs(self.source.sparkSession, self.shuffle_partitions):
-            return writer.start()
 
     def run(self) -> StreamingQuery:
         """start() + awaitTermination() — the synchronous (availableNow)

@@ -1970,6 +1970,21 @@ def test_sequence_group_stale_nonnull_cannot_resurrect_past_accepted_null(spark,
     assert (r.a, r.b, r.g1) == (None, "b1", 10)
 
 
+def test_sequence_group_stale_row_cannot_ride_in_on_later_advance(spark, catalog):
+    """A batch row whose group sequence loses to the STORED one stays
+    rejected even when a later row of the same batch advances the
+    group with a NULL member: the batch folds onto the stored state,
+    not onto its own partial (which would accept the stale row)."""
+    t = _seq_group_table(catalog)
+    t.upsert(spark.createDataFrame([(1, None, "b1", 3, "c1", 1)], t.schema).coalesce(1))
+    t.upsert(spark.createDataFrame(
+        [(1, "aX", None, 0, None, 2), (1, None, None, 7, None, 3)], t.schema
+    ).coalesce(1))
+    [r] = t.read(spark).collect()
+    assert (r.a, r.b, r.g1) == (None, "b1", 7)
+    assert (r.c, r.g2) == ("c1", 3)
+
+
 def test_sequence_group_in_batch_matches_cross_commit(spark, catalog):
     """The same rows produce the same merged image whether they arrive
     as one batch or as per-row commits — the stored/in-batch combine

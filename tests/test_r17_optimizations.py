@@ -105,8 +105,9 @@ def test_stream_confs_scopes_and_restores(spark):
     with stream_confs(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         with stream_confs(spark, partitions=16):
-            # nested run keeps the OUTERMOST value (restore-at-depth-0)
-            pass
+            # a nested scope applies its own value and restores the outer one
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         assert spark.conf.get("spark.sql.shuffle.partitions") != before
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     with stream_confs(spark, partitions=16):

@@ -2245,11 +2245,11 @@ def test_dedup_ingest_replay_refreshes_search_index(spark, catalog, tmp_path):
 
 
 def test_stream_confs_nested_and_concurrent(spark):
-    """stream_confs mutates the confs of the session it is given —
-    nested entries restore only at the outermost exit, and concurrent
-    entries from several threads (operator sinks of two streaming
-    queries sharing the session) never leave the session at the
-    micro-batch values."""
+    """stream_confs mutates the confs of the session it is given — a
+    nested entry applies its own partition count and gives the outer
+    scope's values back on exit, and concurrent entries from several
+    threads (queries started at once on one session) take turns and
+    never leave the session at the micro-batch values."""
     import threading
 
     from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
@@ -2257,13 +2257,13 @@ def test_stream_confs_nested_and_concurrent(spark):
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     sp0 = spark.conf.get("spark.sql.shuffle.partitions")
 
-    # nested: inner exit must NOT restore (the outer body still runs at
-    # micro-batch settings); outer exit restores the TRUE pre-entry values
+    # nested: the inner scope runs at its own count, its exit restores
+    # the outer scope's values; outer exit restores the pre-entry values
     with stream_confs(spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         with stream_confs(spark, partitions=4):
-            pass
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
@@ -2305,8 +2305,9 @@ def test_pipeline_start_pins_stream_confs_on_query_session(spark, catalog, tmp_p
     """A Pipeline started with start() alone runs on a session clone
     that carries the micro-batch confs: its transform sees AQE off and
     8 shuffle partitions, the stateful partition count pinned in
-    offsets/0 follows (and ``shuffle_partitions`` overrides it), and
-    the parent session keeps its own values throughout."""
+    offsets/0 follows (and ``shuffle_partitions`` overrides it, also
+    inside an open stream_confs scope), and the parent session keeps
+    its own values throughout."""
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     parent_before = tuple(spark.conf.get(k) for k in keys)
     src_dir = str(tmp_path / "src")
@@ -2339,6 +2340,47 @@ def test_pipeline_start_pins_stream_confs_on_query_session(spark, catalog, tmp_p
     seen, pinned = run("confs_override", shuffle_partitions=3)
     assert seen[0] == ("false", "3")
     assert pinned["spark.sql.shuffle.partitions"] == "3"
+    assert tuple(spark.conf.get(k) for k in keys) == parent_before
+
+    # a caller may hold a scope around its starts: the override still wins
+    from advent_of_code_flink_paimon_spark.streaming.pipelines import stream_confs
+
+    with stream_confs(spark):
+        seen, pinned = run("confs_nested", shuffle_partitions=3)
+        assert tuple(spark.conf.get(k) for k in keys) == ("false", "8")
+    assert seen[0] == ("false", "3")
+    assert pinned["spark.sql.shuffle.partitions"] == "3"
+    assert tuple(spark.conf.get(k) for k in keys) == parent_before
+
+
+def test_operator_sink_runs_on_query_session(spark, catalog, tmp_path, monkeypatch):
+    """An operator pipeline's sink body works on its query's session
+    clone, which carries the micro-batch confs; the parent session
+    keeps its own values while the body runs."""
+    from advent_of_code_flink_paimon_spark.operators import text
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    parent_before = tuple(spark.conf.get(k) for k in keys)
+    seen = []
+    refresh = text.refresh_inverted_index
+
+    def spy(session, *a, **kw):
+        seen.append((
+            tuple(session.conf.get(k) for k in keys),
+            tuple(spark.conf.get(k) for k in keys),
+        ))
+        return refresh(session, *a, **kw)
+
+    monkeypatch.setattr(text, "refresh_inverted_index", spy)
+    schema, src_dir = "doc_id long, text string", str(tmp_path / "src")
+    spark.createDataFrame([(1, "alpha beta"), (2, "gamma")], schema).write.parquet(src_dir)
+    p = text.SearchIngestPipeline(spark, catalog, "confdocs", str(tmp_path / "ck"))
+    q = p.start(spark.readStream.schema(schema).parquet(src_dir))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert seen and seen[0] == (("false", "8"), parent_before)
     assert tuple(spark.conf.get(k) for k in keys) == parent_before
 
 
@@ -2383,7 +2425,8 @@ def test_two_queries_run_sink_bodies_concurrently(spark, catalog, tmp_path):
 
 def test_only_pipelines_module_sets_stream_confs():
     """AQE and the shuffle partition count are set at runtime in one
-    place in the package: stream_confs in streaming/pipelines.py."""
+    place in the package: stream_confs in streaming/pipelines.py, which
+    is also the one module that starts streaming queries."""
     import ast
     import re
 
@@ -2392,7 +2435,7 @@ def test_only_pipelines_module_sets_stream_confs():
     keys = {"spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"}
     sql_set = re.compile(r"\bSET\s+spark\.sql\.(adaptive\.enabled|shuffle\.partitions)\b", re.I)
     root = os.path.dirname(pkg.__file__)
-    setters = set()
+    setters, starters = set(), set()
     for dirpath, _, files in os.walk(root):
         for name in files:
             if not name.endswith(".py"):
@@ -2403,6 +2446,8 @@ def test_only_pipelines_module_sets_stream_confs():
             rel = os.path.relpath(path, root)
             if sql_set.search(src):
                 setters.add(rel)
+            if "stream_confs(" in src or "writeStream" in src:
+                starters.add(rel)
             for node in ast.walk(ast.parse(src)):
                 if (
                     isinstance(node, ast.Call)
@@ -2414,6 +2459,7 @@ def test_only_pipelines_module_sets_stream_confs():
                 ):
                     setters.add(rel)
     assert setters == {os.path.join("streaming", "pipelines.py")}
+    assert starters == {os.path.join("streaming", "pipelines.py")}
 
 
 def _img_payload(w, h, color, fmt="bmp"):
